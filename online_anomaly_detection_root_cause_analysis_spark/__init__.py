@@ -18,8 +18,8 @@ Layout
 - ``sources``     deterministic pages generator, batch/stream readers
 - ``operators``   windowed aggregation, offset baseline, detectors, RCA
                   contributor finders, dedup/similarity/text-analysis ops
-- ``detection``   composite detector pipelines (threshold, macrobase)
-- ``streaming``   stateful streaming stages, exactly-once sink, listener
+- ``streaming``   stateful streaming stages (the one detector + RCA tail,
+                  ``StreamingTail``), exactly-once sink, listener
 """
 
 __version__ = "0.1.0"

@@ -1,8 +1,10 @@
 """End-to-end MacroBase chain golden tests — the analog of the
 reference's crown-jewel pipeline tests (EWStreamingSummarizerTest
 .scala:53-348), on deterministically re-synthesized fixtures
-(FIXTURES.md): specs match the reference tests; goldens are the same
-qualitative assertions (planted root cause is what gets reported)."""
+(FIXTURES.md), driven through the engine's one MacroBase chain
+(`StreamingTail`): specs match the reference tests; goldens are the
+same qualitative assertions (planted root cause is what gets
+reported)."""
 
 import pandas as pd
 import pytest
@@ -10,25 +12,42 @@ import pytest
 from online_anomaly_detection_root_cause_analysis_spark.algorithms.ewfeature import (
     EWFeatureSpec,
 )
+from online_anomaly_detection_root_cause_analysis_spark.algorithms.models import (
+    Dimension,
+)
 from online_anomaly_detection_root_cause_analysis_spark.algorithms.summarizer import (
     SummarizerSpec,
 )
-from online_anomaly_detection_root_cause_analysis_spark.detection.macrobase import (
-    run_macrobase_chain,
+from online_anomaly_detection_root_cause_analysis_spark.streaming.state import (
+    StreamingTail,
+    TailConfig,
 )
 
 from .fixtures import make_sensor10k_power, make_sensor10k_temp, make_simple_low_metric
 
 
-def _rows_from_df(df: pd.DataFrame, metric_col: str):
-    """The reference readCSV convention (EWStreamingSummarizerTest
-    .scala:19-51): metric column = current = baseline; every other
-    column is a level-1 dimension."""
+def _run_chain(
+    df: pd.DataFrame, metric_col: str, det: EWFeatureSpec, summ: SummarizerSpec
+) -> list[dict]:
+    """One tail window per fixture row, in the reference readCSV
+    convention (EWStreamingSummarizerTest.scala:19-51): the metric
+    column is the window value and every other column is a level-1
+    dimension whose group is its column name. baseline_n=1 leaves the
+    offset baseline empty; the MacroBase detector keeps its own."""
+    tail = StreamingTail(
+        TailConfig(
+            mode="macrobase", rca_mode="macrobase", baseline_n=1,
+            detector_spec=det, summarizer_spec=summ,
+        )
+    )
     dim_cols = [c for c in df.columns if c != metric_col]
+    out: list[dict] = []
     for i, row in enumerate(df.itertuples(index=False)):
         d = row._asdict()
         metric = float(d[metric_col])
-        yield i, metric, metric, {c: str(d[c]) for c in dim_cols}
+        breakdown = {Dimension(c, str(d[c]), c, 1): metric for c in dim_cols}
+        out.extend(tail.process_window(i, metric, 1, breakdown))
+    return [r for r in out if r["row_type"] == "rca"]
 
 
 def _summaries(rows_long: list[dict]) -> list[list[tuple[str, str]]]:
@@ -51,7 +70,7 @@ def test_mad_analyzer_simple():
         summary_generation_period=99,
     )
     df = make_simple_low_metric()
-    out = run_macrobase_chain(_rows_from_df(df, "A5"), det, summ)
+    out = _run_chain(df, "A5", det, summ)
     summaries = _summaries(out)
     assert len(summaries) >= 1
     # golden (reference asserts 1 summary whose top dimension is A1=0;
@@ -73,7 +92,7 @@ def test_sensor10k_power():
         summary_generation_period=9999,
     )
     df = make_sensor10k_power()
-    out = run_macrobase_chain(_rows_from_df(df, "power_drain"), det, summ)
+    out = _run_chain(df, "power_drain", det, summ)
     summaries = _summaries(out)
     # golden: exactly one summary, its single dimension is device 2040
     assert len(summaries) == 1
@@ -93,7 +112,7 @@ def test_sensor10k_temp():
         attribute_combinations=True, summary_generation_period=9999,
     )
     df = make_sensor10k_temp()
-    out = run_macrobase_chain(_rows_from_df(df, "temperature"), det, summ)
+    out = _run_chain(df, "temperature", det, summ)
     summaries = _summaries(out)
     assert len(summaries) >= 1
     # golden: every reported dimension is firmware 0.4 and/or M101,
@@ -107,43 +126,6 @@ def test_sensor10k_temp():
                 assert value == "M101"
             else:
                 pytest.fail(f"unexpected dimension {name}={value}")
-
-
-def test_macrobase_spark_wrapper(spark):
-    """Same chain through the Spark applyInPandas wrapper."""
-    from online_anomaly_detection_root_cause_analysis_spark.detection.macrobase import (
-        macrobase_summaries,
-    )
-
-    det = EWFeatureSpec(
-        warmup_count=10, sample_size=10, decay_period=50, decay_rate=0.01,
-        training_period=50, percentile=0.99,
-    )
-    summ = SummarizerSpec(
-        summary_update_period=50, decay_rate=0.01, outlier_item_summary_size=1000,
-        inlier_item_summary_size=1000, min_oi_ratio=1, min_support=0.02,
-        attributes=["A1", "A2", "A3", "A4"], attribute_combinations=True,
-        summary_generation_period=99,
-    )
-    df = make_simple_low_metric()
-    rows = [
-        (seq, cur, base, dims)
-        for seq, cur, base, dims in _rows_from_df(df, "A5")
-    ]
-    sdf = spark.createDataFrame(
-        rows, "seq long, current double, baseline double, dims map<string,string>"
-    )
-    out = macrobase_summaries(sdf, det, summ).collect()
-    # identical to the pure-Python run
-    pure = run_macrobase_chain(_rows_from_df(df, "A5"), det, summ)
-    assert len(out) == len(pure)
-    spark_set = sorted(
-        (r.summary_id, r.num_records, r.dim_name, r.dim_value) for r in out
-    )
-    pure_set = sorted(
-        (r["summary_id"], r["num_records"], r["dim_name"], r["dim_value"]) for r in pure
-    )
-    assert spark_set == pure_set
 
 
 def test_pairs_gate_operating_point_precondition():

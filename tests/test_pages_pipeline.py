@@ -1,14 +1,15 @@
 """End-to-end tests over the Common-Crawl-style pages input
 (BASELINE.json input_hint): extraction byte-identity, the dimension
 hierarchy, and the planted (lang, host) anomaly surfacing as the top
-root cause through the full threshold+hierarchical-RCA pipeline."""
+root cause through the shipped threshold+RCA path: long-form window
+aggregates -> `make_batch_tail`."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from online_anomaly_detection_root_cause_analysis_spark.config import web_pages_config
-from online_anomaly_detection_root_cause_analysis_spark.detection.pipeline import (
-    run_threshold_pipeline,
+from online_anomaly_detection_root_cause_analysis_spark.config import (
+    web_pages_config,
+    web_pages_parent_value,
 )
 from online_anomaly_detection_root_cause_analysis_spark.sources.pages import (
     AnomalySpan,
@@ -18,6 +19,14 @@ from online_anomaly_detection_root_cause_analysis_spark.sources.pages import (
 )
 from online_anomaly_detection_root_cause_analysis_spark.sources.records import (
     build_page_records,
+)
+from online_anomaly_detection_root_cause_analysis_spark.streaming.job import (
+    long_form_window_aggs,
+)
+from online_anomaly_detection_root_cause_analysis_spark.streaming.state import (
+    TOTAL_DIM,
+    TailConfig,
+    make_batch_tail,
 )
 
 CFG = web_pages_config()
@@ -51,10 +60,6 @@ def test_parent_value_twin_matches_column_form(spark, pages_df):
     derivations in url_dimension_cols for every host the generator can
     emit. Assert the multi-label-host invariant (the twin's stated
     precondition) and value-level agreement host->domain->tld."""
-    from online_anomaly_detection_root_cause_analysis_spark.config import (
-        web_pages_parent_value,
-    )
-
     rows = (
         build_page_records(pages_df, CFG)
         .select("url_host", "url_domain", "url_tld")
@@ -85,37 +90,50 @@ def test_url_hierarchy_dimensions(spark, pages_df):
     assert CFG.level("lang") == 1
 
 
+def _threshold_tail(pages_df, rca_mode: str):
+    """Threshold detection at the p95 of the 300/60 s window totals
+    with `rca_mode` RCA; returns (alert rows, RCA rows in emission
+    order)."""
+    aggs = long_form_window_aggs(build_page_records(pages_df, CFG), CFG, 300, 60)
+    p95 = (
+        aggs.filter(F.col("dim_name") == TOTAL_DIM)
+        .agg(F.expr("percentile(dim_sum, 0.95)"))
+        .first()[0]
+    )
+    cfg = TailConfig(
+        mode="threshold",
+        rca_mode=rca_mode,
+        min_value=0,
+        max_value=float(p95),
+        parent_of=dict(CFG.hierarchy_pairs()),
+        parent_value_fn=web_pages_parent_value,
+    )
+    rows = make_batch_tail(aggs, cfg).collect()
+    return (
+        [r for r in rows if r.row_type == "alert"],
+        [r for r in rows if r.row_type == "rca"],
+    )
+
+
+def _rank1(rca, key):
+    """The first (highest-cost) RCA row per `key(row)`; each RCA
+    result's rows are emitted in rank order."""
+    top = {}
+    for r in rca:
+        top.setdefault(key(r), r)
+    return list(top.values())
+
+
 def test_planted_anomaly_is_top_root_cause(spark, pages_df):
     """The anomaly span drives (el, h7.site*.*) volume 8x: the alert
     windows must be the span windows and hierarchical RCA must rank
     lang=el / host h7.* as the top contributors in their groups."""
-    recs = build_page_records(pages_df, CFG)
-    totals_max = (
-        run_threshold_pipeline(recs, CFG, min_value=0, max_value=float("inf"))
-        .totals.agg(F.expr("percentile(current, 0.95)"))
-        .first()[0]
-    )
-    parent_exprs = {
-        "url_host": F.regexp_extract(F.col("dim_value"), r"^[^.]+\.(.+)$", 1),
-        "url_domain": F.substring_index(F.col("dim_value"), ".", -1),
-    }
-    res = run_threshold_pipeline(
-        recs,
-        CFG,
-        min_value=0,
-        max_value=float(totals_max),
-        rca_method="hierarchical",
-        parent_value_exprs=parent_exprs,
-    )
-    alerts = res.alerts.collect()
+    alerts, rca = _threshold_tail(pages_df, "hierarchical")
     assert len(alerts) > 0
-
-    rca = res.rca.collect()
     assert rca
+    top = _rank1(rca, lambda r: (r.seq, r.dim_group))
     # top content-group contributor of rank 1 rows should be lang=el
-    content_top = [
-        r for r in rca if r.dimension_group == "content" and r.rank == 1
-    ]
+    content_top = [r for r in top if r.dim_group == "content"]
     assert content_top
     el_share = sum(1 for r in content_top if r.dim_value == "el") / len(content_top)
     assert el_share >= 0.8, {r.dim_value for r in content_top}
@@ -124,36 +142,24 @@ def test_planted_anomaly_is_top_root_cause(spark, pages_df):
     # follow their parent's ratio aggregate upward — ThirdEye
     # BalancedCostFunction semantics), so rank 1 is url_tld=uk, with
     # site7.uk / h7.site7.uk trailing in the same group
-    traffic_top = [r for r in rca if r.dimension_group == "traffic" and r.rank == 1]
+    traffic_top = [r for r in top if r.dim_group == "traffic"]
     assert traffic_top
     # 'uk' dominates rank 1 (a few post-span windows alert on the
     # rebound, where the background tld wins)
     uk_share = sum(1 for r in traffic_top if r.dim_value == "uk") / len(traffic_top)
     assert uk_share >= 0.8, {r.dim_value for r in traffic_top}
     lineage = {"uk", "site7.uk", "h7.site7.uk"}
-    in_lineage = [r for r in rca if r.dimension_group == "traffic" and r.dim_value in lineage]
+    in_lineage = [r for r in rca if r.dim_group == "traffic" and r.dim_value in lineage]
     # children of the lineage surface alongside the tld in most windows
     assert len(in_lineage) > len(traffic_top)
 
 
 def test_simple_rca_on_pages(spark, pages_df):
-    recs = build_page_records(pages_df, CFG)
-    p95 = (
-        run_threshold_pipeline(recs, CFG, min_value=0, max_value=float("inf"))
-        .totals.agg(F.expr("percentile(current, 0.95)"))
-        .first()[0]
-    )
-    res = run_threshold_pipeline(
-        recs, CFG, min_value=0, max_value=float(p95), rca_method="simple"
-    )
-    rca = res.rca.collect()
+    _, rca = _threshold_tail(pages_df, "simple")
     assert rca
-    top_by_anomaly = {}
-    for r in rca:
-        if r.rank == 1:
-            top_by_anomaly[r.anomaly_id] = (r.dim_name, r.dim_value)
+    top_by_anomaly = _rank1(rca, lambda r: r.seq)
     # the planted lineage (el / uk / site7.uk / h7.site7.uk) dominates
     # rank-1 contributors
     lineage = {"el", "uk", "site7.uk", "h7.site7.uk"}
-    hits = sum(1 for (_, value) in top_by_anomaly.values() if value in lineage)
+    hits = sum(1 for r in top_by_anomaly if r.dim_value in lineage)
     assert hits / len(top_by_anomaly) >= 0.8
